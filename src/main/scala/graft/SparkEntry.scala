@@ -318,7 +318,7 @@ object SparkEntry {
       val tris = TriLiterals.map(triOf)
       idx.trigrams.get.filter(col("tri").isin(tris.map(Integer.valueOf): _*))
         .flatMap { b =>
-          Postings.decodeTriDocs(b, dps).iterator.map(d => (graft.functions.Text.trigramHex(b.tri), d))
+          Postings.decodeDocs(b, dps).iterator.map(d => (graft.functions.Text.trigramHex(b.tri), d))
         }.toDF("tri", "docid").orderBy("tri", "docid")
     }),
     // J7: N-way merge with docid rebase ≡ direct build (general re-encode)

@@ -37,8 +37,12 @@ object Shingles {
     while (i < m) {
       val parts = new Array[UTF8String](n)
       var j = 0
-      while (j < n) { parts(j) = toks.getUTF8String(i + j); j += 1 }
-      // concatWs skips null parts — same as concat_ws over a slice
+      // a null token stays a null part, which concatWs skips — same as
+      // concat_ws over a slice, whatever ArrayData holds the tokens
+      while (j < n) {
+        parts(j) = if (toks.isNullAt(i + j)) null else toks.getUTF8String(i + j)
+        j += 1
+      }
       seen.add(UTF8String.concatWs(Space, parts: _*))
       i += 1
     }

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.TaskContext
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration.Duration
+
 import graft.functions.{Text, Varint}
 
 /** A built (or loaded) index: handles to the five index tables + meta.
@@ -895,8 +898,9 @@ object IndexBuilder {
 
   /** Commit marker. `parts >= 0` records how many lineage sidecars the
     * stage is expected to have written (one per task), making the build
-    * auditable at load time ([[validateLineage]]). Legacy markers hold a
-    * bare timestamp; both forms are accepted by readers. */
+    * auditable at load time ([[validateLineage]]). Markers written by
+    * [[graft.streaming.IndexFeeder.persist]] hold a bare timestamp; both
+    * forms are accepted by readers. */
   private def commitStage(dir: String, stage: String, parts: Int = -1): Unit =
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/_COMMITTED_$stage"),
@@ -907,7 +911,7 @@ object IndexBuilder {
     if (!f.exists()) return -1
     val s = java.nio.file.Files.readString(f.toPath)
     val i = s.indexOf("\"parts\":")
-    if (i < 0) -1 // legacy timestamp-only marker: nothing to validate
+    if (i < 0) -1 // timestamp-only marker (IndexFeeder.persist): nothing to validate
     else s.substring(i + 8).takeWhile(c => c == '-' || c.isDigit).toInt
   }
 
@@ -937,8 +941,8 @@ object IndexBuilder {
     * sidecar: the commit marker records the expected task count, so a
     * build that lost a partition (partial copy, manual tampering, a
     * half-restored checkpoint) is detected at load time instead of
-    * silently serving an index with missing postings. No-op for legacy
-    * markers without a parts record. */
+    * silently serving an index with missing postings. No-op for
+    * timestamp-only markers without a parts record. */
   def validateLineage(dir: String): Unit =
     Seq("postings", "trigrams").foreach { stage =>
       val expected = committedParts(dir, stage)
@@ -960,11 +964,29 @@ object IndexBuilder {
       }
     }
 
+  /** Wait for both stages of a concurrent pair, then rethrow the first
+    * failure: a failed stage must not leave its sibling's job still
+    * writing parquet and commit markers into the index dir after the
+    * build has thrown. */
+  private[graft] def awaitBoth(a: Future[Unit], b: Future[Unit]): Unit = {
+    val ra = Await.ready(a, Duration.Inf).value.get
+    val rb = Await.ready(b, Duration.Inf).value.get
+    ra.get; rb.get
+  }
+
   /** Build and persist, stage by stage, skipping stages whose commit
     * marker already exists — the checkpoint/resume discipline (mirrors
     * the importer's atomic `.tmp`→rename + skip of committed shards,
     * reference importer.go:233-239,452-465). Returns the number of stages
-    * actually executed (0 on a fully-resumed build). */
+    * actually executed (0 on a fully-resumed build).
+    *
+    * The only on-disk layout is the combined one: token and trigram
+    * blocks together in `blocks/` (a `kind` column tells them apart),
+    * beside `docs/`, `docnorms/`, `termstats/`, `revterms/`,
+    * `delterms/`, `meta.json`, the `_COMMITTED_<stage>` markers and the
+    * `_lineage/` sidecars. Markers, meta and lineage are plain files
+    * written with java.nio, so they assume a local POSIX filesystem (or
+    * a shared mount with the same rename and visibility semantics). */
   def buildPersistent(spark: SparkSession, docs: DataFrame, dir: String,
       cfg0: Config = Config(),
       onStage: (String, Double) => Unit = (_, _) => ()): Int = {
@@ -1027,7 +1049,6 @@ object IndexBuilder {
     val needEnc = !stageDone(dir, "postings") ||
       (cfg.buildTrigrams && !stageDone(dir, "trigrams"))
     if (needNorms || needEnc) {
-      import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
       val fNorms = Future {
         if (needNorms) {
@@ -1071,21 +1092,13 @@ object IndexBuilder {
           if (cfg.buildTrigrams) commitStage(dir, "trigrams", encParts)
         }
       }
-      Await.result(fNorms, scala.concurrent.duration.Duration.Inf)
-      Await.result(fEnc, scala.concurrent.duration.Duration.Inf)
+      awaitBoth(fNorms, fEnc)
       if (needNorms) { stageEnd("docnorms"); ran += 1 }
       if (needEnc) { stageEnd("encode"); ran += 1 }
     }
 
     if (!stageDone(dir, "termstats")) {
-      // resume compatibility: a pre-r05 build interrupted after its
-      // postings stage committed has $dir/postings, not the combined
-      // $dir/blocks — read whichever layout exists, like load() does
-      // (code-review r05)
-      val blocks =
-        if (new java.io.File(s"$dir/blocks").exists()) readPostingBlocks(spark, dir)
-        else spark.read.parquet(s"$dir/postings").as[PostingBlock]
-      blocks.toDF()
+      readPostingBlocks(spark, dir).toDF()
         .groupBy("term")
         .agg(sum("df").as("df"), sum("cf").as("cf"), max("maxTf").as("maxTf"))
         .write.mode(SaveMode.Overwrite).parquet(s"$dir/termstats")
@@ -1101,7 +1114,6 @@ object IndexBuilder {
     val needDel = !stageDone(dir, "delterms")
     val needRev = !stageDone(dir, "revterms")
     if (needDel || needRev) {
-      import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
       val fDel = Future {
         if (needDel) {
@@ -1133,8 +1145,7 @@ object IndexBuilder {
           commitStage(dir, "revterms")
         }
       }
-      Await.result(fDel, scala.concurrent.duration.Duration.Inf)
-      Await.result(fRev, scala.concurrent.duration.Duration.Inf)
+      awaitBoth(fDel, fRev)
       if (needDel) { stageEnd("delterms"); ran += 1 }
       if (needRev) { stageEnd("revterms"); ran += 1 }
     }
@@ -1146,6 +1157,11 @@ object IndexBuilder {
     ran
   }
 
+  /** Load a committed index dir written by [[buildPersistent]] or
+    * [[graft.streaming.IndexFeeder.persist]]. The only supported on-disk
+    * layout is the combined `blocks/` one (see [[buildPersistent]]); like
+    * the build, load assumes markers, meta and lineage sit on a local
+    * POSIX filesystem. */
   def load(spark: SparkSession, dir: String): BuiltIndex = {
     import spark.implicits._
     // a loadable index needs every non-optional stage committed — meta.json
@@ -1155,38 +1171,13 @@ object IndexBuilder {
     }
     validateLineage(dir) // every committed encode task left its sidecar
     val meta = readMeta(s"$dir/meta.json")
-    // combined layout ($dir/blocks, kind-partitioned — one encode pass)
-    // when present; the legacy separate postings/trigrams dirs otherwise
-    // (pre-r05 builds and IndexFeeder.persist both write those)
-    val combined = new java.io.File(s"$dir/blocks").exists()
-    val postings =
-      if (combined) readPostingBlocks(spark, dir)
-      else spark.read.parquet(s"$dir/postings").as[PostingBlock]
-    val tri =
-      if (!stageDone(dir, "trigrams")) None
-      else if (combined) Some(readTriBlocks(spark, dir))
-      else Some(spark.read.parquet(s"$dir/trigrams").as[TriBlock])
-    val docsDf = spark.read.parquet(s"$dir/docs")
-    val docmapDf = // tolerate pre-r02 layouts without the gate column
-      if (docsDf.columns.contains("indexable")) docsDf
-      else {
-        // ADVICE r02: backfilling indexable=true hides the trigram recall
-        // hole for legacy indexes (ingest-gated docs have no trigram
-        // postings but would claim to) — surface it so operators know
-        // substring/regexp recall is not oracle-exact until a rebuild
-        System.err.println(s"[graft] WARN: $dir predates the 'indexable' " +
-          "gate column; synthesizing indexable=true for all docs — " +
-          "substring/regexp recall over ingest-gated docs is not " +
-          "oracle-exact until the index is rebuilt")
-        docsDf.withColumn("indexable", lit(true))
-      }
     BuiltIndex(
       meta,
-      docmapDf
+      spark.read.parquet(s"$dir/docs")
         .select("docId", "url", "shard", "dl", "lang", "indexable").as[DocEntry],
       spark.read.parquet(s"$dir/docnorms").as[DocNorms],
-      postings,
-      tri,
+      readPostingBlocks(spark, dir),
+      if (stageDone(dir, "trigrams")) Some(readTriBlocks(spark, dir)) else None,
       spark.read.parquet(s"$dir/termstats").as[TermStats],
       revdict = // optional (pre-r04 layouts): suffix falls back to a scan
         if (stageDone(dir, "revterms")) Some(spark.read.parquet(s"$dir/revterms"))
@@ -1207,11 +1198,8 @@ object IndexBuilder {
     val s = java.nio.file.Files.readString(java.nio.file.Paths.get(path))
     def f(k: String): String =
       s.split(s""""$k":""")(1).takeWhile(c => c != ',' && c != '}')
-    // absent in pre-r05 metas, where the docs table always carried text
-    def fOpt(k: String, dflt: String): String =
-      if (s.contains(s""""$k":""")) f(k) else dflt
     IndexMeta(f("nDocs").toLong, f("avgdl").toDouble, f("docsPerShard").toLong,
       f("nShards").toInt, f("blockSize").toInt, f("hasPositions").toBoolean,
-      f("version").toInt, fOpt("textInDocs", "true").toBoolean)
+      f("version").toInt, f("textInDocs").toBoolean)
   }
 }

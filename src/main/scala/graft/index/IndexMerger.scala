@@ -182,9 +182,9 @@ object IndexMerger {
           p.trigrams.get.flatMap { blk =>
             val occ: Iterator[(Long, Int)] =
               if (blk.nPos > 0) {
-                val (ds, ps) = Postings.decodeTriPositionsFlat(blk, srcDps)
+                val (ds, ps) = Postings.decodePositionsFlat(blk, srcDps)
                 Iterator.tabulate(ds.length)(i => (ds(i), ps(i)))
-              } else Postings.decodeTriDocs(blk, srcDps).iterator.map(d => (d, 0))
+              } else Postings.decodeDocs(blk, srcDps).iterator.map(d => (d, 0))
             occ.map { case (doc, pos) =>
               val id = doc + b
               val shard = (id / dps).toInt

@@ -48,6 +48,23 @@ final case class DocEntry(
     lang: String,
     indexable: Boolean = true)
 
+/** The fields every posting block carries, token or trigram: the doc
+  * section (`docs`, delta+varint local docIds, `df` of them in
+  * [`firstDoc`, `lastDoc`]) and the positional section (`nPos` entries of
+  * `pos` deltas with the `posrel` doc-boundary bitmap). One decoder
+  * serves both block types ([[Postings.decodeDocs]],
+  * [[Postings.decodePositionsFlat]]). */
+trait DocBlock {
+  def shard: Int
+  def df: Int
+  def firstDoc: Long
+  def lastDoc: Long
+  def docs: Array[Byte]
+  def nPos: Int
+  def pos: Array[Byte]
+  def posrel: Array[Byte]
+}
+
 /** One posting block for a token term.
   * `docs`  = delta+varint of (docId - shard*docsPerShard), sorted distinct.
   * `tfs`   = varint term frequency per doc (parallel to docs).
@@ -66,7 +83,7 @@ final case class PostingBlock(
     tfs: Array[Byte],
     nPos: Int,
     pos: Array[Byte],
-    posrel: Array[Byte])
+    posrel: Array[Byte]) extends DocBlock
 
 /** One posting block for a byte trigram (tri = 24-bit packed bytes,
   * reference `internal/index/types.go:7`). Positions are byte offsets.
@@ -81,7 +98,7 @@ final case class TriBlock(
     docs: Array[Byte],
     nPos: Int,
     pos: Array[Byte],
-    posrel: Array[Byte])
+    posrel: Array[Byte]) extends DocBlock
 
 /** One row of the combined encode output: token posting blocks (kind=0)
   * and trigram blocks (kind=1) in a single dataset, so the persistent

@@ -1,43 +1,27 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{BM25, Text, Varint}
 
 /** Decoded view of posting blocks. */
 object Postings {
-  /** Decode one block into (globalDocId, tf) pairs. */
-  def decodeDocsTfs(b: PostingBlock, dps: Long): (Array[Long], Array[Int]) = {
-    val local = Varint.decodeDeltas(b.docs, b.df)
-    val base = b.shard.toLong * dps
-    (local.map(base + _), Varint.decodeInts(b.tfs, b.df))
-  }
+  /** Decode one block's doc section into ascending global docIds. */
+  def decodeDocs(b: DocBlock, dps: Long): Array[Long] =
+    Varint.decodeDeltasLong(b.docs, b.df, b.shard.toLong * dps)
+
+  /** Decode one token block into (globalDocId, tf) pairs. */
+  def decodeDocsTfs(b: PostingBlock, dps: Long): (Array[Long], Array[Int]) =
+    (decodeDocs(b, dps), Varint.decodeInts(b.tfs, b.df))
 
   /** Decode one block's positional section into occurrence-level PARALLEL
     * PRIMITIVE arrays (globalDocId(i), position(i)), sorted by (doc, pos)
     * — no per-block `Map[Long, Array[Int]]`, no tuple/boxing garbage in
-    * the positional verification loop (VERDICT r04 wrong #2; the tf path
-    * set the shape, restrictedBlocksDecode). */
-  def decodePositionsFlat(b: PostingBlock, dps: Long): (Array[Long], Array[Int]) = {
-    val local = Varint.decodeDeltas(b.docs, b.df)
-    val (docs, poss) = Varint.decodePositions(
-      Varint.PosRun(b.pos, b.posrel, b.nPos), local)
-    val base = b.shard.toLong * dps
-    val g = new Array[Long](docs.length)
-    var i = 0
-    while (i < docs.length) { g(i) = base + docs(i); i += 1 }
-    (g, poss)
-  }
-
-  def decodeTriDocs(b: TriBlock, dps: Long): Array[Long] = {
-    val local = Varint.decodeDeltas(b.docs, b.df)
-    val base = b.shard.toLong * dps
-    local.map(base + _)
-  }
-
-  /** [[decodePositionsFlat]] for a trigram block (byte-offset positions). */
-  def decodeTriPositionsFlat(b: TriBlock, dps: Long): (Array[Long], Array[Int]) = {
+    * the positional verification loop (VERDICT r04 wrong #2). Positions
+    * are token offsets for a [[PostingBlock]], byte offsets for a
+    * [[TriBlock]]. */
+  def decodePositionsFlat(b: DocBlock, dps: Long): (Array[Long], Array[Int]) = {
     val local = Varint.decodeDeltas(b.docs, b.df)
     val (docs, poss) = Varint.decodePositions(
       Varint.PosRun(b.pos, b.posrel, b.nPos), local)
@@ -744,35 +728,105 @@ object Search {
     heap.dequeueAll.reverse.toSeq
   }
 
-  /** Posting AND (J1): docs containing ALL terms, via per-shard sorted-list
-    * intersection, smallest df first (the reference's selectivity ordering,
-    * `internal/index/query.go:48-62`). */
-  def searchAnd(spark: SparkSession, idx: BuiltIndex, queryTerms: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val terms = foldTerms(queryTerms).distinct.sorted
-    // NB: no separate absent-term pre-check job — a globally absent term
-    // means byTerm.size < nTerms in EVERY shard, so the per-shard guard
-    // below already yields the empty result in the same single Spark job
-    val dps = idx.meta.docsPerShard
-    val nTerms = terms.length
-    idx.postings.filter(col("term").isin(terms: _*))
-      .groupByKey(_.shard)
-      .flatMapGroups { (_, it) =>
-        val byTerm = it.toArray.groupBy(_.term)
-        if (byTerm.size < nTerms) Iterator.empty
+  private type Audit = Option[(org.apache.spark.util.LongAccumulator,
+    org.apache.spark.util.LongAccumulator)]
+
+  /** A posting query over one shard's lists: a key, or the AND/OR of
+    * sub-queries. Keys are terms, trigrams, or a folded trigram whose
+    * case variants share one key. */
+  private sealed trait ListQuery[K] extends Serializable
+  private final case class Key[K](k: K) extends ListQuery[K]
+  private final case class AllOf[K](subs: Seq[ListQuery[K]]) extends ListQuery[K]
+  private final case class AnyOf[K](subs: Seq[ListQuery[K]]) extends ListQuery[K]
+
+  /** The one per-shard posting-list core of the set-at-a-time operators
+    * (searchAnd/searchOr/boolSearch, phrase/near, the literal and regexp
+    * candidates) — dcs's single AND/OR evaluator,
+    * `internal/index/query.go:33-116`. It holds one shard's blocks per
+    * key sorted by firstDoc and knows each list's length from the summed
+    * block df without decoding. A key's doc list decodes on first use
+    * and is kept. [[eval]] intersects smallest list first and stops at
+    * the first absent key or empty partial result, so no operator
+    * decodes a list its answer does not need. [[positions]] is the
+    * restrict-gated positional decode (J3). */
+  private final class ShardLists[K](blocks: Map[K, Seq[DocBlock]], dps: Long) {
+    private val byKey: Map[K, Array[DocBlock]] =
+      blocks.map { case (k, bs) => k -> bs.toArray.sortBy(_.firstDoc) }
+    private val decoded = scala.collection.mutable.HashMap.empty[K, Array[Long]]
+
+    /** `k`'s list length from block metadata; 0 when `k` is absent. */
+    private def length(k: K): Long = byKey.get(k).fold(0L)(_.iterator.map(_.df.toLong).sum)
+
+    /** `k`'s ascending doc list. One term's (or trigram's) blocks
+      * partition the doc space and concatenate; the overlapping blocks of
+      * a folded trigram's case variants union. */
+    private def docs(k: K): Array[Long] = decoded.getOrElseUpdate(k,
+      byKey.get(k).fold(Array.emptyLongArray) { bs =>
+        val parts = bs.map(Postings.decodeDocs(_, dps))
+        if (bs.indices.drop(1).forall(i => bs(i).firstDoc > bs(i - 1).lastDoc))
+          Array.concat(parts: _*)
+        else unionMany(parts)
+      })
+
+    /** Upper bound of `q`'s list length from block metadata (exact for a key). */
+    private def bound(q: ListQuery[K]): Long = q match {
+      case Key(k) => length(k)
+      case AllOf(subs) => if (subs.isEmpty) 0L else subs.map(bound).min
+      case AnyOf(subs) => subs.map(bound).sum
+    }
+
+    def eval(q: ListQuery[K]): Array[Long] = q match {
+      case Key(k) => docs(k)
+      case AnyOf(subs) => unionMany(subs.map(eval).toArray)
+      case AllOf(subs) =>
+        val bySize = subs.sortBy(bound).toIndexedSeq
+        if (bySize.isEmpty || bound(bySize.head) == 0) Array.emptyLongArray
         else {
-          val lists = byTerm.values.toArray
-            .map(bs => bs.sortBy(_.firstDoc).flatMap(b => Postings.decodeDocsTfs(b, dps)._1))
-            .sortBy(_.length)
-          var acc = lists(0)
+          var acc = eval(bySize.head)
           var i = 1
-          while (i < lists.length && acc.nonEmpty) {
-            acc = intersectSorted(acc, lists(i)); i += 1
+          while (i < bySize.length && acc.nonEmpty) {
+            acc = intersectSorted(acc, eval(bySize(i))); i += 1
           }
-          acc.iterator
+          acc
         }
-      }
-      .toDF("docId")
+    }
+
+    def and(keys: Seq[K]): Array[Long] = eval(AllOf(keys.map(Key(_))))
+
+    /** `k`'s positional lookup restricted to the sorted candidates: only
+      * blocks whose [firstDoc,lastDoc] can hold a candidate decode their
+      * positions (dcs applies its restrict during every section read,
+      * `internal/index/query.go:139-168`); `audit` counts (decoded,
+      * skipped) blocks. */
+    def positions(k: K, cands: Array[Long], audit: Audit): Postings.PosLookup =
+      Postings.posLookupOf(byKey.getOrElse(k, Array.empty[DocBlock]).toSeq.filter { b =>
+        val keep = rangeIntersects(cands, b.firstDoc, b.lastDoc)
+        audit.foreach { case (dec, skip) => if (keep) dec.add(1) else skip.add(1) }
+        keep
+      }.map(Postings.decodePositionsFlat(_, dps)))
+  }
+
+  /** `f` over each shard's [[ShardLists]]: the one plan shape of the
+    * set-at-a-time operators — the caller's key IN (...) pushdown, then
+    * groupByKey(shard). */
+  private def perShard[B <: DocBlock, K](blocks: Dataset[B], keyOf: B => K, dps: Long)(
+      f: ShardLists[K] => Iterator[Long]): Dataset[Long] =
+    blocks.groupByKey(_.shard)(Encoders.scalaInt)
+      .flatMapGroups((_, it) => f(new ShardLists[K](it.toSeq.groupBy(keyOf), dps)))(
+        Encoders.scalaLong)
+
+  /** [[perShard]] over the token lists of `terms` (term IN pushdown). */
+  private def termShards(idx: BuiltIndex, terms: Seq[String])(
+      f: ShardLists[String] => Iterator[Long]): DataFrame =
+    perShard(idx.postings.filter(col("term").isin(terms: _*)),
+      (b: PostingBlock) => b.term, idx.meta.docsPerShard)(f).toDF("docId")
+
+  /** Posting AND (J1): docs containing ALL terms — [[boolSearch]] over the
+    * AND of the folded terms, smallest list first (the reference's
+    * selectivity ordering, `internal/index/query.go:48-62`). */
+  def searchAnd(spark: SparkSession, idx: BuiltIndex, queryTerms: Seq[String]): DataFrame = {
+    import graft.queries.BoolQuery.{And, Term}
+    boolSearch(spark, idx, And(foldTerms(queryTerms).distinct.sorted.map(Term(_))))
   }
 
   /** Decoded (term, docId, tf) rows for `terms`, restricted to the given
@@ -850,116 +904,73 @@ object Search {
     }.toDF("term", "docId", "tf")
   }
 
-  /** Posting OR (J2): union with dedup. Each term's blocks decode into
-    * one already-sorted primitive doc array (blocks sorted by firstDoc,
-    * docs ascending within a block), and the per-term arrays merge with
-    * the balanced [[unionMany]] — no boxed SortedSet on what is also the
-    * wildcard/fuzzy expansion hot path (up to 1024 expanded terms route
-    * through here via prefixSearch/suffixSearch/fuzzySearch; VERDICT
-    * r05 #2). Output order (ascending docId per shard) is unchanged. */
+  /** Posting OR (J2): union with dedup — [[boolSearch]] over the OR of
+    * the folded terms. The per-term lists merge with the balanced
+    * [[unionMany]]: this is also the wildcard/fuzzy expansion hot path
+    * (up to 1024 expanded terms route through here via
+    * prefixSearch/suffixSearch/fuzzySearch). Output is ascending docId
+    * per shard. */
   def searchOr(spark: SparkSession, idx: BuiltIndex, queryTerms: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val terms = foldTerms(queryTerms).distinct.sorted
-    val dps = idx.meta.docsPerShard
-    idx.postings.filter(col("term").isin(terms: _*))
-      .groupByKey(_.shard)
-      .flatMapGroups { (_, it) =>
-        val lists = it.toArray.groupBy(_.term).valuesIterator
-          .map(bs => bs.sortBy(_.firstDoc).flatMap(b => Postings.decodeDocsTfs(b, dps)._1))
-          .toArray
-        unionMany(lists).iterator
-      }
-      .toDF("docId")
+    import graft.queries.BoolQuery.{Or, Term}
+    boolSearch(spark, idx, Or(foldTerms(queryTerms).distinct.sorted.map(Term(_))))
   }
 
   /** Evaluate an arbitrary nested AND/OR tree over term postings in ONE
-    * job: per shard, each referenced term's docid sections decode once and
-    * the tree folds bottom-up with sorted intersect/union — the same
-    * evaluator shape [[regexpCandidates]] runs over trigram sections. This
-    * is the posting-side of dcs's nested alternation semantics
+    * job, on the per-shard [[ShardLists]] core — the evaluator
+    * [[regexpCandidates]] runs over trigram lists. This is the
+    * posting-side of dcs's nested alternation semantics
     * (`internal/index/regexp.go:41-281`: arbitrary OR nested under
-    * concatenation), which the flat searchAnd/searchOr pair cannot express
-    * (`(a b) OR (c d)` is neither one AND nor one OR). */
+    * concatenation), e.g. `(a b) OR (c d)`. */
   def boolSearch(spark: SparkSession, idx: BuiltIndex,
       q: graft.queries.BoolQuery): DataFrame = {
     import spark.implicits._
     import graft.queries.{BoolQuery => BQ}
     val terms = q.leafTerms.distinct.sorted
     if (terms.isEmpty) return spark.emptyDataset[Long].toDF("docId")
-    val dps = idx.meta.docsPerShard
-    idx.postings.filter(col("term").isin(terms: _*))
-      .groupByKey(_.shard)
-      .flatMapGroups { (_, it) =>
-        val lists: Map[String, Array[Long]] = it.toArray.groupBy(_.term).map {
-          case (t, bs) =>
-            t -> bs.sortBy(_.firstDoc).flatMap(b => Postings.decodeDocsTfs(b, dps)._1)
-        }
-        def eval(n: BQ): Array[Long] = n match {
-          case BQ.Term(t) => lists.getOrElse(t, Array.empty[Long])
-          case BQ.And(subs) =>
-            val parts = subs.map(eval)
-            if (parts.exists(_.isEmpty)) Array.empty[Long]
-            else parts.sortBy(_.length).reduce(intersectSorted)
-          case BQ.Or(subs) =>
-            unionMany(subs.map(eval).toArray)
-        }
-        eval(q).iterator
-      }
-      .toDF("docId")
+    def tree(n: BQ): ListQuery[String] = n match {
+      case BQ.Term(t) => Key(t)
+      case BQ.And(subs) => AllOf(subs.map(tree))
+      case BQ.Or(subs) => AnyOf(subs.map(tree))
+    }
+    val lq = tree(q)
+    termShards(idx, terms)(_.eval(lq).iterator)
   }
 
+  /** The step [[phrase]] and [[near]] share: per shard, the docs holding
+    * every term (docid intersection first, it is cheap), then each
+    * term's positions decoded only for blocks that can hold one of those
+    * candidates (F6); `keep` verifies one candidate. */
+  private def positional(idx: BuiltIndex, uniq: Seq[String], audit: Audit)(
+      keep: (Map[String, Postings.PosLookup], Long) => Boolean): DataFrame =
+    termShards(idx, uniq) { lists =>
+      val cands = lists.and(uniq)
+      if (cands.isEmpty) Iterator.empty
+      else {
+        val pos = uniq.map(t => t -> lists.positions(t, cands, audit)).toMap
+        cands.iterator.filter(keep(pos, _))
+      }
+    }
+
   /** Phrase query (J3 analogue over token positions): docs where the terms
-    * occur at consecutive token positions. Restrict-list pushdown (F6):
-    * positions are only decoded for docs surviving the docid intersection. */
+    * occur at consecutive token positions. */
   def phrase(spark: SparkSession, idx: BuiltIndex, phraseTerms: Seq[String],
       posAudit: Option[(org.apache.spark.util.LongAccumulator,
         org.apache.spark.util.LongAccumulator)] = None): DataFrame = {
-    import spark.implicits._
     require(phraseTerms.nonEmpty)
     val folded = foldTerms(phraseTerms) // index terms are case-folded
-    val uniq = folded.distinct
-    val dps = idx.meta.docsPerShard
+    val head = folded.head
     val termsWithOffsets = folded.zipWithIndex
-    idx.postings.filter(col("term").isin(uniq: _*))
-      .groupByKey(_.shard)
-      .flatMapGroups { (_, it) =>
-        val byTerm = it.toArray.groupBy(_.term)
-        if (byTerm.size < uniq.length) Iterator.empty
-        else {
-          // docid intersection first (cheap), then positional verify
-          val docLists = uniq.map(t =>
-            byTerm(t).sortBy(_.firstDoc).flatMap(b => Postings.decodeDocsTfs(b, dps)._1))
-          val candidates = docLists.sortBy(_.length).reduce(intersectSorted)
-          if (candidates.isEmpty) Iterator.empty
-          else {
-            // in-decode restrict for the POSITIONAL sections: a rare AND
-            // common phrase decodes O(matching blocks) of the common
-            // term's positions, not O(its total positions). Decoded runs
-            // stay parallel primitive arrays (PosLookup) — no boxed
-            // doc→positions map in the verification loop.
-            val posByTerm: Map[String, Postings.PosLookup] = uniq.map { t =>
-              t -> restrictedPosLookup[PostingBlock](byTerm(t).iterator,
-                candidates, b => (b.firstDoc, b.lastDoc),
-                b => Postings.decodePositionsFlat(b, dps), posAudit)
-            }.toMap
-            val headLookup = posByTerm(folded.head)
-            candidates.iterator.filter { d =>
-              val first = headLookup.positionsOf(d)
-              var i = 0
-              var found = false
-              while (!found && i < first.length) {
-                val p0 = first(i)
-                found = termsWithOffsets.forall { case (t, off) =>
-                  posByTerm(t).has(d, p0 + off)
-                }
-                i += 1
-              }
-              found
-            }
-          }
-        }
+    positional(idx, folded.distinct, posAudit) { (pos, d) =>
+      val first = pos(head).positionsOf(d)
+      var i = 0
+      var found = false
+      while (!found && i < first.length) {
+        val p0 = first(i)
+        found = termsWithOffsets.forall { case (t, off) => pos(t).has(d, p0 + off) }
+        i += 1
       }
-      .toDF("docId")
+      found
+    }
   }
 
   /** NEAR/k proximity query — the positional-join generalization of
@@ -968,58 +979,33 @@ object Search {
     * (|posA - posB| <= window). dcs verifies adjacency byte-positionally
     * for literals (`internal/index/read.go:530-676`); NEAR relaxes the
     * fixed offset to a bounded gap, the classic proximity operator a
-    * full-text engine adds on top of that machinery. Same pushdown as
-    * phrase: docid intersection first, positions decode only for docs
-    * surviving it. */
+    * full-text engine adds on top of that machinery. */
   def near(spark: SparkSession, idx: BuiltIndex, termA: String, termB: String,
       window: Int,
       posAudit: Option[(org.apache.spark.util.LongAccumulator,
         org.apache.spark.util.LongAccumulator)] = None): DataFrame = {
-    import spark.implicits._
     require(window >= 0, "window must be non-negative")
     val uniq = foldTerms(Seq(termA, termB)).distinct // index terms are folded
     require(uniq.length == 2,
       "near() needs two distinct terms (terms case-fold like the index " +
         s"dictionary, so '$termA' and '$termB' are the same term)")
-    val dps = idx.meta.docsPerShard
-    idx.postings.filter(col("term").isin(uniq: _*))
-      .groupByKey(_.shard)
-      .flatMapGroups { (_, it) =>
-        val byTerm = it.toArray.groupBy(_.term)
-        if (byTerm.size < 2) Iterator.empty
-        else {
-          val docLists = uniq.map(t =>
-            byTerm(t).sortBy(_.firstDoc).flatMap(b => Postings.decodeDocsTfs(b, dps)._1))
-          val candidates = docLists.sortBy(_.length).reduce(intersectSorted)
-          if (candidates.isEmpty) Iterator.empty
-          else {
-            // positional in-decode restrict, as in [[phrase]]; primitive
-            // PosLookup runs, no boxed doc→positions maps
-            val posByTerm: Map[String, Postings.PosLookup] = uniq.map { t =>
-              t -> restrictedPosLookup[PostingBlock](byTerm(t).iterator,
-                candidates, b => (b.firstDoc, b.lastDoc),
-                b => Postings.decodePositionsFlat(b, dps), posAudit)
-            }.toMap
-            candidates.iterator.filter { d =>
-              // merged two-pointer over the two sorted position lists:
-              // O(|pa| + |pb|) min-gap check, no cross product
-              val pa = posByTerm(uniq(0)).positionsOf(d)
-              val pb = posByTerm(uniq(1)).positionsOf(d)
-              var i = 0
-              var j = 0
-              var ok = false
-              while (!ok && i < pa.length && j < pb.length) {
-                val diff = pa(i) - pb(j)
-                if (math.abs(diff) <= window) ok = true
-                else if (diff < 0) i += 1
-                else j += 1
-              }
-              ok
-            }
-          }
-        }
+    val (a, b) = (uniq(0), uniq(1))
+    positional(idx, uniq, posAudit) { (pos, d) =>
+      // merged two-pointer over the two sorted position lists:
+      // O(|pa| + |pb|) min-gap check, no cross product
+      val pa = pos(a).positionsOf(d)
+      val pb = pos(b).positionsOf(d)
+      var i = 0
+      var j = 0
+      var ok = false
+      while (!ok && i < pa.length && j < pb.length) {
+        val diff = pa(i) - pb(j)
+        if (math.abs(diff) <= window) ok = true
+        else if (diff < 0) i += 1
+        else j += 1
       }
-      .toDF("docId")
+      ok
+    }
   }
 
   /** Prefix (wildcard `pre*`) term query: expand the prefix against the
@@ -1257,50 +1243,7 @@ object Search {
       posAudit: Option[(org.apache.spark.util.LongAccumulator,
         org.apache.spark.util.LongAccumulator)] = None): DataFrame = {
     import spark.implicits._
-    val tri = idx.trigrams.getOrElse(
-      throw new IllegalStateException("index built without trigram sections"))
-    val bytes = literal.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    require(bytes.length >= 3, "substring query needs >= 3 bytes")
-    val grams = Text.trigramsWithOffsets(literal)
-    val needed = grams.map(_._1).distinct
-    val dps = idx.meta.docsPerShard
-    val first = grams.head._1
-    val last = grams.last._1
-    val delta = bytes.length - 3
-    val candidates = tri.filter(col("tri").isin(needed.toSeq.map(Integer.valueOf): _*))
-      .groupByKey(_.shard)
-      .flatMapGroups { (_, it) =>
-        val byTri = it.toArray.groupBy(_.tri)
-        if (byTri.size < needed.length) Iterator.empty
-        else {
-          val lists = needed.map(t =>
-            byTri(t).sortBy(_.firstDoc).flatMap(b => Postings.decodeTriDocs(b, dps)))
-          val docsAll = lists.sortBy(_.length).reduce(intersectSorted)
-          if (docsAll.isEmpty || first == Text.AllSpaces || last == Text.AllSpaces)
-            docsAll.iterator // all-spaces trigram has no positions; skip refinement
-          else {
-            // positional in-decode restrict (as in [[phrase]]): only tri
-            // blocks whose doc range can hold a candidate decode positions;
-            // primitive PosLookup runs, no boxed doc→positions maps
-            def posOf(t: Int): Postings.PosLookup =
-              restrictedPosLookup[TriBlock](byTri(t).iterator, docsAll,
-                b => (b.firstDoc, b.lastDoc),
-                b => Postings.decodeTriPositionsFlat(b, dps), posAudit)
-            val firstPos = posOf(first)
-            val lastPos = posOf(last)
-            docsAll.iterator.filter { d =>
-              val fp = firstPos.positionsOf(d)
-              var i = 0
-              var found = false
-              while (!found && i < fp.length) {
-                found = lastPos.has(d, fp(i) + delta)
-                i += 1
-              }
-              found
-            }
-          }
-        }
-      }
+    val candidates = literalCandidates(idx, literal, Seq(_), posAudit)
     val counted = audit match {
       case Some(acc) => candidates.map { d => acc.add(1); d }
       case None => candidates
@@ -1310,6 +1253,46 @@ object Search {
     // so verification sees them (recall-hole fix; dcs instead excludes
     // them from the corpus entirely, write.go:143-147)
     counted.toDF("docId").union(nonIndexableDocs(idx)).distinct()
+  }
+
+  /** Index candidates of a literal, shared by [[substringCandidates]]
+    * (`variants` = identity) and [[substringNoCase]] (the ≤8 case
+    * variants of each folded trigram). Each trigram of the literal keys
+    * the union of its variants' lists; candidates hold every key, refined
+    * by the first and last trigram's byte positions (the reference's
+    * positional fast path, `internal/index/read.go:530-676`). */
+  private def literalCandidates(idx: BuiltIndex, literal: String,
+      variants: Int => Seq[Int], posAudit: Audit): Dataset[Long] = {
+    val tri = idx.trigrams.getOrElse(
+      throw new IllegalStateException("index built without trigram sections"))
+    val bytes = literal.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    require(bytes.length >= 3, "substring query needs >= 3 bytes")
+    val grams = Text.trigramsWithOffsets(literal)
+    val needed = grams.map(_._1).distinct.toSeq
+    val keyOf: Map[Int, Int] = needed.flatMap(t => variants(t).map(_ -> t)).toMap
+    val first = grams.head._1
+    val last = grams.last._1
+    val delta = bytes.length - 3
+    perShard(tri.filter(col("tri").isin(keyOf.keys.toSeq.sorted.map(Integer.valueOf): _*)),
+        (b: TriBlock) => keyOf(b.tri), idx.meta.docsPerShard) { lists =>
+      val cands = lists.and(needed)
+      if (cands.isEmpty || first == Text.AllSpaces || last == Text.AllSpaces)
+        cands.iterator // all-spaces trigram has no positions; skip refinement
+      else {
+        val firstPos = lists.positions(first, cands, posAudit)
+        val lastPos = if (last == first) firstPos else lists.positions(last, cands, posAudit)
+        cands.iterator.filter { d =>
+          val fp = firstPos.positionsOf(d)
+          var i = 0
+          var found = false
+          while (!found && i < fp.length) {
+            found = lastPos.has(d, fp(i) + delta)
+            i += 1
+          }
+          found
+        }
+      }
+    }
   }
 
   /** docIds absent from the trigram index (failed the ingest gate). */
@@ -1348,68 +1331,17 @@ object Search {
           "or ASCII literal")
       return verified(idx.docmap.select(col("docId")).toDF())
     }
-    val bytes = folded.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    require(bytes.length >= 3, "substring query needs >= 3 bytes")
-    val grams = Text.trigramsWithOffsets(folded)
-    val needed = grams.map(_._1).distinct
-    def variants(t: Int): Seq[Int] = {
-      def opts(b: Int): Seq[Int] =
-        if (b >= 'a' && b <= 'z') Seq(b, b - 32) else Seq(b)
+    // every case variant of a folded trigram (≤8)
+    def opts(b: Int): Seq[Int] =
+      if (b >= 'a' && b <= 'z') Seq(b, b - 32) else Seq(b)
+    val variants: Int => Seq[Int] = t =>
       for {
         b0 <- opts((t >> 16) & 0xff)
         b1 <- opts((t >> 8) & 0xff)
         b2 <- opts(t & 0xff)
       } yield (b0 << 16) | (b1 << 8) | b2
-    }
-    // variant → its folded trigram (injective: folding is deterministic)
-    val toFolded: Map[Int, Int] =
-      needed.flatMap(t => variants(t).map(_ -> t)).toMap
-    val allKeys = toFolded.keys.toSeq.sorted
-    val dps = idx.meta.docsPerShard
-    val first = grams.head._1
-    val last = grams.last._1
-    val delta = bytes.length - 3
-    val nNeeded = needed.length
-    val candidates = idx.trigrams.get
-      .filter(col("tri").isin(allKeys.map(Integer.valueOf): _*))
-      .groupByKey(_.shard)
-      .flatMapGroups { (_, it) =>
-        val byFolded = it.toArray.groupBy(b => toFolded(b.tri))
-        if (byFolded.size < nNeeded) Iterator.empty
-        else {
-          // per folded gram: union of all case variants' doc lists
-          val lists = needed.map { lt =>
-            byFolded(lt).iterator.flatMap(b => Postings.decodeTriDocs(b, dps))
-              .toArray.sorted.distinct
-          }
-          val docsAll = lists.sortBy(_.length).reduce(intersectSorted)
-          if (docsAll.isEmpty || first == Text.AllSpaces || last == Text.AllSpaces)
-            docsAll.iterator
-          else {
-            // positional in-decode restrict over the case-variant blocks:
-            // the ≤8 variants' runs overlap in doc space, so posLookupOf
-            // k-way merges them into one sorted primitive run
-            def posOf(lt: Int): Postings.PosLookup =
-              restrictedPosLookup[TriBlock](byFolded(lt).iterator, docsAll,
-                b => (b.firstDoc, b.lastDoc),
-                b => Postings.decodeTriPositionsFlat(b, dps), posAudit)
-            val firstPos = posOf(first)
-            val lastPos = posOf(last)
-            docsAll.iterator.filter { d =>
-              val fp = firstPos.positionsOf(d)
-              var i = 0
-              var found = false
-              while (!found && i < fp.length) {
-                found = lastPos.has(d, fp(i) + delta)
-                i += 1
-              }
-              found
-            }
-          }
-        }
-      }
-      .toDF("docId")
-    verified(candidates.union(nonIndexableDocs(idx)).distinct())
+    verified(literalCandidates(idx, folded, variants, posAudit).toDF("docId")
+      .union(nonIndexableDocs(idx)).distinct())
   }
 
   /** Linear-time verification predicate (X2): the Pike-VM NFA of
@@ -1483,32 +1415,26 @@ object Search {
       return None
 
     val keyOf: Map[String, Int] = wanted.zip(keys).toMap
-    val dps = idx.meta.docsPerShard
-    val tri = idx.trigrams.get
-    val candidates = tri.filter(col("tri").isin(keys.map(Integer.valueOf): _*))
-      .groupByKey(_.shard)
-      .flatMapGroups { (_, it) =>
-        val lists: Map[Int, Array[Long]] = it.toArray.groupBy(_.tri).map {
-          case (t, bs) => t -> bs.sortBy(_.firstDoc).flatMap(b => Postings.decodeTriDocs(b, dps))
-        }
-        // evaluate the boolean tree; None = unrestricted (ALL)
-        def eval(node: TriQuery): Option[Array[Long]] = node.op match {
-          case TriQuery.QAll => None
-          case TriQuery.QNone => Some(Array.empty[Long])
-          case TriQuery.QAnd =>
-            val parts = node.trigram.map(t => Some(lists.getOrElse(keyOf(t), Array.empty[Long]))) ++
-              node.sub.map(eval)
-            val known = parts.flatten
-            if (known.isEmpty) None
-            else Some(known.sortBy(_.length).reduce(intersectSorted))
-          case TriQuery.QOr =>
-            val parts = node.trigram.map(t => Some(lists.getOrElse(keyOf(t), Array.empty[Long]))) ++
-              node.sub.map(eval)
-            if (parts.exists(_.isEmpty)) None
-            else Some(unionMany(parts.flatten.toArray))
-        }
-        eval(q).map(_.iterator).getOrElse(Iterator.empty)
+    // the compiled query over trigram keys; None = unrestricted (ALL)
+    def tree(n: TriQuery): Option[ListQuery[Int]] = {
+      val tris = n.trigram.map(t => Key(keyOf(t)))
+      n.op match {
+        case TriQuery.QAll => None
+        case TriQuery.QNone => Some(AnyOf(Nil))
+        case TriQuery.QAnd =>
+          val known = tris ++ n.sub.flatMap(tree)
+          if (known.isEmpty) None else Some(AllOf(known))
+        case TriQuery.QOr =>
+          val subs = n.sub.map(tree)
+          if (subs.exists(_.isEmpty)) None else Some(AnyOf(tris ++ subs.flatten))
       }
+    }
+    val lq = tree(q) match {
+      case Some(t) => t
+      case None => return None
+    }
+    val candidates = perShard(idx.trigrams.get.filter(col("tri").isin(keys.map(Integer.valueOf): _*)),
+      (b: TriBlock) => b.tri, idx.meta.docsPerShard)(_.eval(lq).iterator)
     val counted = audit match {
       case Some(acc) => candidates.map { d => acc.add(1); d }
       case None => candidates
@@ -1709,32 +1635,6 @@ object Search {
     }
     lo < cands.length && cands(lo) <= last
   }
-
-  /** Filter blocks to those whose [firstDoc,lastDoc] intersects the sorted
-    * candidate list, counting decoded/skipped blocks into `audit`. */
-  private def restrictBlocks[B](blocks: Iterator[B], cands: Array[Long],
-      range: B => (Long, Long),
-      audit: Option[(org.apache.spark.util.LongAccumulator,
-        org.apache.spark.util.LongAccumulator)]): Iterator[B] =
-    blocks.filter { b =>
-      val (first, last) = range(b)
-      val keep = rangeIntersects(cands, first, last)
-      audit.foreach { case (dec, skip) => if (keep) dec.add(1) else skip.add(1) }
-      keep
-    }
-
-  /** Restrict-gated positional lookup — the J3 in-decode skip: only
-    * blocks whose [firstDoc,lastDoc] can hold a candidate decode their
-    * positions, merged into one primitive PosLookup run. The one
-    * positional verification pipeline, shared by phrase / NEAR /
-    * substring / substringNoCase (code-review r05: was copy-pasted 4×,
-    * and the no-case copy had silently dropped the audit hook). */
-  private def restrictedPosLookup[B](blocks: Iterator[B], cands: Array[Long],
-      range: B => (Long, Long), decode: B => (Array[Long], Array[Int]),
-      audit: Option[(org.apache.spark.util.LongAccumulator,
-        org.apache.spark.util.LongAccumulator)]): Postings.PosLookup =
-    Postings.posLookupOf(
-      restrictBlocks[B](blocks, cands, range, audit).map(decode).toSeq)
 
   private def intersectSorted(a: Array[Long], b: Array[Long]): Array[Long] = {
     val out = scala.collection.mutable.ArrayBuilder.make[Long]

@@ -190,6 +190,9 @@ object Dedup {
       .join(arr.select(col("id").as("id1"), col("arr").as("arr1")), "id1")
       .join(arr.select(col("id").as("id2"), col("arr").as("arr2")), "id2")
       .withColumn("inter", size(array_intersect(col("arr1"), col("arr2"))))
+      // only pairs sharing a shingle, as the shingle join used to give:
+      // at threshold <= 0 a zero-overlap pair would pass j_raw >= threshold
+      .filter(col("inter") > 0)
       .withColumn("j_raw",
         col("inter") / (size(col("arr1")) + size(col("arr2")) - col("inter")))
       .filter(col("j_raw") >= threshold)

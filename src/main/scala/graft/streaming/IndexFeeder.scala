@@ -89,11 +89,11 @@ object IndexFeeder {
     idx.docnorms.write.mode(SaveMode.Overwrite).parquet(s"$dir/docnorms")
     // COMBINED blocks layout (r06, VERDICT r05 next-round #5): published
     // indexes use the same one-dir `blocks` layout fresh persistent
-    // builds write, so load()'s legacy separate postings/trigrams branch
-    // can eventually retire. Token partitions precede trigram partitions
-    // in the union, and each write task holds one source partition, so
-    // row groups stay kind-pure and the kind filter prunes on parquet
-    // min/max stats — exactly the encodeCombined contract.
+    // builds write — the only layout IndexBuilder.load reads. Token
+    // partitions precede trigram partitions in the union, and each write
+    // task holds one source partition, so row groups stay kind-pure and
+    // the kind filter prunes on parquet min/max stats — exactly the
+    // encodeCombined contract.
     val tokBlocks = idx.postings.map(b => graft.index.EncodedBlock(0, b.term, -1,
       b.shard, b.blockId, b.df, b.cf, b.maxTf, b.firstDoc, b.lastDoc,
       b.docs, b.tfs, b.nPos, b.pos, b.posrel))

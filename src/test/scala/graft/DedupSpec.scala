@@ -47,6 +47,23 @@ class DedupSpec extends AnyFunSuite {
       s"recall too low: lsh=${lsh.size} exact=${exact.size}")
   }
 
+  test("lshJaccard at threshold 0 admits only pairs that share a shingle") {
+    // a candidate pair always shares the shingle whose minhash matched —
+    // unless one id labels two texts: id 100 below is both a copy of doc 0
+    // and an unrelated text, so the pair (0, 100) also meets that second
+    // text, with which it shares nothing (jaccard 0)
+    val extra = spark.createDataFrame(Seq(
+      (100L, docs.filter(col("doc_id") === 0).head().getString(1)),
+      (100L, (0 until 12).map(w => s"unrelated$w other$w").mkString(" "))
+    )).toDF("doc_id", "text")
+    val rows = Dedup.lshJaccard(docs.union(extra), "doc_id", "text",
+      shingleN = 3, numHashes = 16, bands = 4, threshold = 0.0)
+      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2)))
+    assert(rows.exists(_._1 == ((0L, 100L))), "the copy of doc 0 must pair with it")
+    assert(rows.forall(_._2 > 0.0),
+      s"zero-overlap pairs admitted: ${rows.filter(_._2 <= 0.0).mkString(", ")}")
+  }
+
   test("embeddingNearDup LSH default is a subset of the exact pairs, same cosines") {
     val rnd = new scala.util.Random(5)
     val base = Array.fill(8)(Array.fill(64)(rnd.nextGaussian()))

@@ -34,6 +34,37 @@ class EngineSpec extends AnyFunSuite {
   lazy val urlToDocId: Map[String, Long] =
     idx.docmap.collect().map(d => d.url -> d.docId).toMap
 
+  // ---- brute-force side of the seeded operator sweeps ------------------
+  /** (docId, text) of every fixture doc. */
+  lazy val fixtureText: Seq[(Long, String)] =
+    pages.collect().map(p => urlToDocId(p.url) -> p.text).toSeq
+  /** Brute-force tokenizer: lowercase, then runs of [a-z0-9]. */
+  private def bruteTokens(text: String): Array[String] =
+    text.toLowerCase(java.util.Locale.ROOT).split("[^a-z0-9]+").filter(_.nonEmpty)
+  lazy val fixtureTokens: Seq[(Long, Array[String])] =
+    fixtureText.map { case (d, t) => d -> bruteTokens(t) }
+  /** A seeded term pool spanning list lengths: terms of 1-3 docs (absent
+    * from most of the 5 shards), mid-frequency and common terms, and a
+    * term absent from the index. */
+  private def termPool(rnd: scala.util.Random): IndexedSeq[String] = {
+    val df = fixtureTokens.flatMap(_._2.distinct).groupBy(identity)
+      .map { case (t, xs) => t -> xs.size }.toSeq.sortBy(_.swap)
+    def pick(lo: Int, hi: Int, n: Int): Seq[String] =
+      rnd.shuffle(df.collect { case (t, c) if c >= lo && c <= hi => t }).take(n)
+    (pick(1, 3, 3) ++ pick(10, 100, 3) ++ pick(300, Int.MaxValue, 2) :+ "zzqnohit").toIndexedSeq
+  }
+  /** A seeded ASCII substring (3-12 chars) of a random doc of `texts`. */
+  private def sampleLiteral(rnd: scala.util.Random,
+      texts: Seq[(Long, String)] = fixtureText): String = {
+    var lit = ""
+    while (lit.length < 3 || !Text.isAscii(lit)) {
+      val t = texts(rnd.nextInt(texts.length))._2
+      val n = 3 + rnd.nextInt(10)
+      if (t.length > n) { val i = rnd.nextInt(t.length - n); lit = t.substring(i, i + n) }
+    }
+    lit
+  }
+
   test("per-row invariant: text == extractText(html), byte-identical") {
     val bad = pages.filter(p => p.text != Text.extractText(p.html)).count()
     assert(bad == 0)
@@ -74,6 +105,29 @@ class EngineSpec extends AnyFunSuite {
     assert(or == (d3 union d7))
     // AND with a term with no postings at all -> empty
     assert(Search.searchAnd(spark, idx, Seq("qmarker3", "zzqnohit")).count() == 0)
+
+    // seeded sweep: term pairs and triples vs the brute-force tokenizer
+    import graft.queries.BoolQuery.{And, Or, Term}
+    val rnd = new scala.util.Random(20261017L)
+    val pool = termPool(rnd)
+    val sets = fixtureTokens.map { case (d, ts) => d -> ts.toSet }
+    def holding(t: String): Set[Long] = sets.collect { case (d, ts) if ts(t) => d }.toSet
+    def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] = df.as[Long].collect().sorted.toSeq
+    for (_ <- 0 until 6) {
+      val q = rnd.shuffle(pool).take(2 + rnd.nextInt(2))
+      val each = q.map(holding)
+      assert(ids(Search.searchAnd(spark, idx, q)) == each.reduce(_ intersect _).toSeq.sorted,
+        s"AND $q")
+      assert(ids(Search.searchOr(spark, idx, q)) == each.reduce(_ union _).toSeq.sorted,
+        s"OR $q")
+      // (q0 AND q1) OR qLast, and (q0 OR qLast) AND q1
+      val t1 = Or(Seq(And(Seq(Term(q(0)), Term(q(1)))), Term(q.last)))
+      assert(ids(Search.boolSearch(spark, idx, t1)) ==
+        ((each(0) intersect each(1)) union each.last).toSeq.sorted, s"bool $t1")
+      val t2 = And(Seq(Or(Seq(Term(q(0)), Term(q.last))), Term(q(1))))
+      assert(ids(Search.boolSearch(spark, idx, t2)) ==
+        ((each(0) union each.last) intersect each(1)).toSeq.sorted, s"bool $t2")
+    }
   }
 
   test("AND with common term restricts correctly (the + qmarker5)") {
@@ -284,6 +338,25 @@ class EngineSpec extends AnyFunSuite {
     // scrambled order must not match
     val none = Search.phrase(spark, idx, Seq("processing", "data")).as[Long].collect().toSet
     assert((none intersect expected).isEmpty || none != expected)
+
+    // seeded sweep: 2-3 token windows of random fixture docs plus random
+    // pool pairs, vs a brute-force consecutive-token scan
+    val rnd = new scala.util.Random(20261018L)
+    val pool = termPool(rnd)
+    val long = fixtureTokens.filter(_._2.length >= 3)
+    def brute(p: Seq[String]): Seq[Long] = fixtureTokens.collect {
+      case (d, ts) if ts.sliding(p.length).exists(_.sameElements(p)) => d
+    }.sorted
+    val phrases = Seq.fill(5) {
+      val ts = long(rnd.nextInt(long.length))._2
+      val n = 2 + rnd.nextInt(2)
+      val i = rnd.nextInt(ts.length - n + 1)
+      ts.slice(i, i + n).toSeq
+    } ++ Seq.fill(2)(rnd.shuffle(pool).take(2))
+    for (p <- phrases) {
+      val got = Search.phrase(spark, idx, p).as[Long].collect().sorted.toSeq
+      assert(got == brute(p), s"phrase $p")
+    }
   }
 
   test("trigram substring search finds needleAlpha in doc 137 (case-exact)") {
@@ -294,6 +367,14 @@ class EngineSpec extends AnyFunSuite {
     assert(got == Seq(urlToDocId(PageGen.url(137))))
     // lowercase variant is a different byte string -> no match
     assert(Search.substring(spark, idx, docsWithIds, "nEEdleAlpha").count() == 0)
+
+    // seeded sweep: random fixture substrings vs String.contains
+    val rnd = new scala.util.Random(20261019L)
+    for (lit <- Seq.fill(6)(sampleLiteral(rnd)) :+ "zqzqzq") {
+      val got = Search.substring(spark, idx, docsWithIds, lit).as[Long].collect().sorted.toSeq
+      val want = fixtureText.collect { case (d, t) if t.contains(lit) => d }.sorted
+      assert(got == want, s"substring '$lit'")
+    }
   }
 
   test("case-insensitive substring search folds trigram variants (nocase path)") {
@@ -311,6 +392,34 @@ class EngineSpec extends AnyFunSuite {
     val b = docsWithIds.filter(lower(col("text")).contains("data processing"))
       .select("docId").as[Long].collect().sorted.toSeq
     assert(a == b && a.nonEmpty)
+
+    // seeded sweep on a mixed-case copy of 200 fixture docs (the generated
+    // text is lowercase, so only here do a trigram's case variants share a
+    // shard with overlapping blocks): random substrings with random case
+    // flips vs a lowercased String.contains
+    val rnd = new scala.util.Random(20261020L)
+    val mixedText = fixtureText.take(200).map { case (d, t) =>
+      d -> t.split(" ", -1).map { w =>
+        rnd.nextInt(4) match { case 0 => w.capitalize; case 1 => w.toUpperCase; case _ => w }
+      }.mkString(" ")
+    }
+    val mixedDocs = spark.createDataFrame(mixedText.map { case (d, t) => (f"u$d%06d", t, "en") })
+      .toDF("url", "text", "lang")
+    val mIdx = IndexBuilder.build(spark, mixedDocs,
+      IndexBuilder.Config(docsPerShard = 32, blockSize = 4, partitions = 4))
+    val mWithIds = mixedDocs.join(mIdx.docmap.select("docId", "url"), "url")
+      .select("docId", "text")
+    val mById = mWithIds.collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    for (lit0 <- Seq.fill(6)(sampleLiteral(rnd, mById))) {
+      val lit = lit0.map(c => if (rnd.nextBoolean()) c.toUpper else c.toLower)
+      val got = Search.substringNoCase(spark, mIdx, mWithIds, lit)
+        .as[Long].collect().sorted.toSeq
+      val folded = lit.toLowerCase(java.util.Locale.ROOT)
+      val want = mById.collect {
+        case (d, t) if t.toLowerCase(java.util.Locale.ROOT).contains(folded) => d
+      }.sorted
+      assert(got == want && want.nonEmpty, s"substringNoCase '$lit'")
+    }
   }
 
   test("recall hole closed: gate-failing docs still reachable by substring/regexp") {
@@ -536,6 +645,24 @@ class EngineSpec extends AnyFunSuite {
         .map(_.getLong(0)).sorted.toSeq
       assert(got == expected, s"pattern $pattern")
       assert(expected.nonEmpty, s"vacuous pattern $pattern")
+    }
+
+    // seeded sweep: patterns built from random fixture words (an
+    // alternation, a trailing class, a wildcard) vs a java.util.regex scan
+    val rnd = new scala.util.Random(20261021L)
+    val words = fixtureText.flatMap { case (_, t) => "[A-Za-z0-9]{5,}".r.findAllIn(t) }
+      .distinct.sorted
+    def word(): String = words(rnd.nextInt(words.length))
+    val patterns = Seq.fill(2) {
+      val (w1, w2, w3) = (word(), word(), word())
+      Seq(s"$w1|$w2", w1.init + "[a-z0-9]", w3.take(2) + "." + w3.drop(3))
+    }.flatten
+    for (pattern <- patterns) {
+      val got = Search.regexpSearch(spark, idx, docsWithIds, pattern)
+        .as[Long].collect().sorted.toSeq
+      val p = java.util.regex.Pattern.compile(pattern)
+      val want = fixtureText.collect { case (d, t) if p.matcher(t).find() => d }.sorted
+      assert(got == want && want.nonEmpty, s"pattern $pattern")
     }
   }
 
@@ -779,6 +906,16 @@ class EngineSpec extends AnyFunSuite {
     // adjacency (w=1) must admit at least every phrase hit "the of"/"of the"
     val phraseHits = Search.phrase(spark, idx, Seq("the", "of")).as[Long].collect().toSet
     assert(phraseHits.subsetOf(Search.near(spark, idx, "the", "of", 1).as[Long].collect().toSet))
+
+    // seeded sweep: random pool pairs and windows
+    val rnd = new scala.util.Random(20261022L)
+    val pool = termPool(rnd)
+    for (_ <- 0 until 6) {
+      val Seq(a, b) = rnd.shuffle(pool).take(2)
+      val w = Seq(0, 1, 2, 5, 20)(rnd.nextInt(5))
+      val got = Search.near(spark, idx, a, b, w).as[Long].collect().toSet
+      assert(got == bruteNear(a, b, w), s"near($a, $b, $w)")
+    }
   }
 
   test("prefix search expands the dictionary and unions postings") {

@@ -36,33 +36,19 @@ class ResumeSpec extends AnyFunSuite {
     assert(json.contains("\"rows\":") && json.contains("\"encodedBytes\":"))
   }
 
-  test("resume completes a legacy-layout build interrupted before termstats") {
-    // a pre-r05 build wrote separate postings/trigrams dirs (no combined
-    // blocks/); one interrupted after its encode stages committed must
-    // still resume to completion — the termstats stage reads whichever
-    // layout exists, like load() (code-review r05)
-    import org.apache.commons.io.FileUtils
-    val dir1 = tmpDir()
-    val dir2 = tmpDir()
-    val docs = PageGen.pages(spark, 300, 4).toDF().select("url", "text", "lang")
-    val cfg = IndexBuilder.Config(docsPerShard = 64, blockSize = 16, partitions = 4)
-    IndexBuilder.buildPersistent(spark, docs, dir1, cfg)
-    val full = IndexBuilder.load(spark, dir1)
-    Seq("docs", "docnorms", "_lineage").foreach { d =>
-      FileUtils.copyDirectory(new java.io.File(s"$dir1/$d"), new java.io.File(s"$dir2/$d"))
-    }
-    FileUtils.copyFile(new java.io.File(s"$dir1/meta.json"),
-      new java.io.File(s"$dir2/meta.json"))
-    full.postings.write.parquet(s"$dir2/postings")
-    full.trigrams.get.write.parquet(s"$dir2/trigrams")
-    Seq("docmap", "docnorms", "postings", "trigrams").foreach { st =>
-      FileUtils.copyFile(new java.io.File(s"$dir1/_COMMITTED_$st"),
-        new java.io.File(s"$dir2/_COMMITTED_$st"))
-    }
-    val ran = IndexBuilder.buildPersistent(spark, docs, dir2, cfg)
-    assert(ran == 3) // termstats + delterms + revterms; encode stages skipped
-    val legacy = IndexBuilder.load(spark, dir2)
-    assert(legacy.termstats.collect().toSet == full.termstats.collect().toSet)
+  test("a failed stage pair waits for its slower sibling before rethrowing") {
+    import scala.concurrent.Future
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val siblingDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failed = Future.failed[Unit](new IllegalStateException("stage failed"))
+    val slow = Future { Thread.sleep(500); siblingDone.set(true) }
+    val e = intercept[IllegalStateException](IndexBuilder.awaitBoth(failed, slow))
+    assert(e.getMessage == "stage failed")
+    assert(siblingDone.get(), "awaitBoth returned while the sibling stage still ran")
+    // and the other way round: the slow stage fails, the fast one is fine
+    val slowFail = Future[Unit] { Thread.sleep(200); throw new IllegalStateException("late") }
+    val e2 = intercept[IllegalStateException](IndexBuilder.awaitBoth(Future.unit, slowFail))
+    assert(e2.getMessage == "late")
   }
 
   test("lineage accessor: one row per (stage, partition), metrics add up") {

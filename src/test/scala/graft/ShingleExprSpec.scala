@@ -40,6 +40,29 @@ class ShingleExprSpec extends AnyFunSuite {
     assert(both2.filter(not(col("hof") <=> col("native"))).count() == 0)
   }
 
+  test("graft_shingles skips null tokens like concat_ws (arbitrary SQL arrays)") {
+    // tokensCol never emits a null token, but graft_shingles is a
+    // registered SQL function over any array<string>. The repartition
+    // keeps the arrays out of the optimizer's local-relation fold, so the
+    // kernel reads them as UnsafeArrayData, as in a real scan.
+    graft.plans.GraftFunctions.register(spark)
+    import spark.implicits._
+    val arrays = Seq[(Long, Seq[String])](
+      (1L, Seq("a", null, "b", "c")),
+      (2L, Seq(null, null, null)),
+      (3L, Seq("x", "y", null)),
+      (4L, Seq(null, "p", "q", "r", null, "p", "q")),
+      (5L, Seq("solo", null))
+    ).toDF("id", "toks").repartition(2)
+    for (n <- Seq(2, 3)) {
+      val both = arrays.select(col("id"),
+        Dedup.shinglesOf(col("toks"), n).as("hof"),
+        Dedup.nativeShingles(col("toks"), n).as("native"))
+      val bad = both.filter(not(col("hof") <=> col("native")))
+      assert(bad.count() == 0, s"n=$n: " + bad.collect().take(3).mkString("\n"))
+    }
+  }
+
   test("graft_minhash element i == array_min(transform(sh, md5(seed_i || sh)))") {
     graft.plans.GraftFunctions.register(spark)
     val k = 16
